@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import graft.sinks.NotionSink.NotionApi
+import graft.sinks.NotionSink.{NotionApi, StoredPage}
 
 /** Live-wire [[NotionSink.NotionApi]] over `java.net.http` — the production
   * transport behind the trait the sink already writes through (reference
@@ -24,7 +24,20 @@ import graft.sinks.NotionSink.NotionApi
   * values to strings ([[NotionSink.formatProperties]]); this class re-wraps
   * each by its declared property type — `title`/`rich_text` as 2000-char
   * text runs, `number` as a bare JSON number, `checkbox` as a boolean,
-  * `date` as `{date: {start: …}}`.
+  * `date` as `{date: {start: …}}` (any other type is sent as `rich_text`).
+  *
+  * The read-back ([[storedPages]], one cursor-paginated query walk) keeps
+  * what the sink needs to decide insert / update / unchanged / soft delete
+  * per row: the key from the title run, the `is_active` checkbox (absent =
+  * active) and every property decoded back into the sink's string form by
+  * [[decode]], the inverse of [[propertyJson]]. Empty properties (`[]`
+  * text, `null` number or date) read as absent. Whatever `decode` cannot
+  * read back exactly — another property type, a number whose rendering
+  * differs from the sent string (a decimal `8.10`, a long ≥ 1e15), a date
+  * range — reads as unknown, so the sink counts that page as changed and
+  * writes it. An update PATCHes the row's properties, sends an explicit
+  * clear (`[]` / `null` / `false`) for each property null in the row,
+  * and sets `is_active` back to true.
   *
   * Topology at scale: the instance that ships into `foreachPartition` is
   * just endpoint config (`@transient lazy` HttpClient — one keep-alive pool
@@ -82,18 +95,60 @@ class HttpNotionApi(
     mapper.createArrayNode().add(run)
   }
 
+  /** The property type on the wire: the declared one when this class can
+    * write it, else `rich_text`. */
+  private def wireType(name: String): String =
+    propertyTypes.get(name) match {
+      case Some(t @ ("title" | "number" | "checkbox" | "date")) => t
+      case _ => "rich_text"
+    }
+
   /** Wrap a pre-formatted value string by its declared property type. */
-  private def propertyJson(name: String, v: String): JsonNode = {
+  private[graft] def propertyJson(name: String, v: String): JsonNode = {
     val node = mapper.createObjectNode()
-    propertyTypes.getOrElse(name, "rich_text") match {
-      case "title" => node.set[JsonNode]("title", textRun(v))
+    wireType(name) match {
+      case t @ ("title" | "rich_text") => node.set[JsonNode](t, textRun(v))
       case "number" => node.put("number", new java.math.BigDecimal(v))
       case "checkbox" => node.put("checkbox", v.toBoolean)
       case "date" => node.set[JsonNode]("date",
         mapper.createObjectNode().put("start", v))
-      case _ => node.set[JsonNode]("rich_text", textRun(v))
     }
     node
+  }
+
+  /** The empty value of a property, sent to clear it. */
+  private def clearJson(name: String): JsonNode = {
+    val node = mapper.createObjectNode()
+    wireType(name) match {
+      case t @ ("title" | "rich_text") => node.putArray(t)
+      case "checkbox" => node.put("checkbox", false)
+      case t => node.putNull(t)
+    }
+    node
+  }
+
+  private def isEmpty(name: String, node: JsonNode): Boolean = {
+    val v = node.path(wireType(name))
+    v.isNull || (v.isArray && v.size() == 0)
+  }
+
+  /** Inverse of [[propertyJson]]: the stored value in the string form
+    * [[NotionSink.formatProperties]] produced, or `None` when the stored
+    * JSON could not have come from that form. */
+  private[graft] def decode(name: String, node: JsonNode): Option[String] = {
+    val t = wireType(name)
+    val v = node.path(t)
+    t match {
+      case "title" | "rich_text" if v.isArray =>
+        val runs = v.elements().asScala.map(_.path("text").path("content")).toSeq
+        if (runs.forall(_.isTextual)) Some(runs.map(_.asText()).mkString)
+        else None
+      case "number" if v.isNumber => Some(NotionSink.numString(v.asDouble()))
+      case "checkbox" if v.isBoolean => Some(v.asBoolean().toString)
+      case "date" if v.path("start").isTextual && !v.hasNonNull("end") &&
+          !v.hasNonNull("time_zone") => Some(v.get("start").asText())
+      case _ => None
+    }
   }
 
   private def propertiesJson(properties: Map[String, String]): ObjectNode = {
@@ -145,9 +200,14 @@ class HttpNotionApi(
     databaseId
   }
 
-  override def existingRecords(): Map[Long, String] = {
+  override def storedPages(): Map[Long, StoredPage] = {
     require(databaseId.nonEmpty, "createDatabase first (or pass an id)")
-    val out = Map.newBuilder[Long, String]
+    // key lives in the title property's first text run (the reference
+    // parses subject_id the same way); rows without one are skipped
+    val titleName = propertyTypes.collectFirst {
+      case (n, "title") => n
+    }.getOrElse("subject_id")
+    val out = Map.newBuilder[Long, StoredPage]
     var cursor: Option[String] = None
     var hasMore = true
     while (hasMore) {
@@ -155,15 +215,17 @@ class HttpNotionApi(
       cursor.foreach(body.put("start_cursor", _))
       val page = request("POST", s"/v1/databases/$databaseId/query", Some(body))
       page.get("results").elements().asScala.foreach { pg =>
-        // key lives in the title property's first text run (the reference
-        // parses subject_id the same way); rows without one are skipped
-        val titleName = propertyTypes.collectFirst {
-          case (n, "title") => n
-        }.getOrElse("subject_id")
-        val title = pg.get("properties").path(titleName).path("title")
+        val props = pg.get("properties")
+        val title = props.path(titleName).path("title")
         if (title.isArray && title.size() > 0) {
           val content = title.get(0).path("text").path("content").asText("")
-          content.toLongOption.foreach(k => out += k -> pg.get("id").asText())
+          content.toLongOption.foreach { k =>
+            val stored = props.fields().asScala
+              .filterNot(e => e.getKey == "is_active" || isEmpty(e.getKey, e.getValue))
+              .map(e => e.getKey -> decode(e.getKey, e.getValue)).toMap
+            out += k -> StoredPage(pg.get("id").asText(),
+              props.path("is_active").path("checkbox").asBoolean(true), stored)
+          }
         }
       }
       hasMore = page.path("has_more").asBoolean(false)
@@ -181,9 +243,14 @@ class HttpNotionApi(
     ()
   }
 
-  override def update(pageId: String, properties: Map[String, String]): Unit = {
+  override def update(pageId: String, properties: Map[String, String],
+      cleared: Set[String]): Unit = {
+    val props = propertiesJson(properties)
+    cleared.toSeq.sorted.foreach(n => props.set[JsonNode](n, clearJson(n)))
+    props.set[JsonNode]("is_active",
+      mapper.createObjectNode().put("checkbox", true))
     val body = mapper.createObjectNode()
-    body.set[JsonNode]("properties", propertiesJson(properties))
+    body.set[JsonNode]("properties", props)
     request("PATCH", s"/v1/pages/$pageId", Some(body))
     ()
   }

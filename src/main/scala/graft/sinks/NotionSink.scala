@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 
@@ -19,11 +18,36 @@ import graft.sources.bangumi.{RateLimiter, Retry}
   * becomes `foreachPartition` with a pooled client per executor, batched
   * rate-limited writes, per-row error isolation (R4 — failed rows counted,
   * pipeline continues), and `LongAccumulator` success/error counters (A5).
-  * The upsert decision (insert vs update vs soft delete) is made
-  * distributively by joining against the read-back key snapshot (S5/J4)
-  * instead of a driver-side dict.
+  *
+  * The upsert is change-aware. One read-back of the sink (S5) gives, per
+  * key, the page id, its `is_active` flag and its stored properties in
+  * [[formatProperties]]' string form; it is broadcast to the write tasks
+  * instead of a driver-side dict, and each row of the frame is decided
+  * against it:
+  *  - insert — the key has no page;
+  *  - unchanged — the page is active and every formatted property
+  *    equals the stored one (and no stored property needs clearing): no
+  *    request is sent;
+  *  - update — anything else: the row's properties are PATCHed, the
+  *    properties null in the row are cleared (a stale value would otherwise
+  *    survive Notion's property-wise merge), and the page is re-activated;
+  *  - soft delete — an active page whose key left the frame gets
+  *    `is_active=false`; pages already inactive are left alone.
+  *
+  * The comparison is conservative: a stored property the transport cannot
+  * read back exactly (unknown type, a number that renders differently, a
+  * missing page property for a non-null value) counts as changed and is
+  * written. A wrong "unchanged" would lose data; a wrong "changed" costs one
+  * request.
   */
 object NotionSink {
+
+  /** One page of the read-back: its id, its `is_active` flag and its stored
+    * properties in [[formatProperties]]' string form. An absent or empty
+    * property has no entry; one the transport cannot read back exactly
+    * maps to `None` and never compares equal. */
+  case class StoredPage(pageId: String, active: Boolean,
+      properties: Map[String, Option[String]])
 
   /** Transport interface; production = HTTP, tests = [[InMemoryNotionApi]].
     * Implementations must be thread-safe (one instance per executor). */
@@ -36,12 +60,19 @@ object NotionSink {
     def ensureParentPage(existing: Option[String], title: String): String
     /** K4: idempotent DDL — declare the typed property schema. */
     def createDatabase(name: String, properties: Map[String, String]): String
-    /** S5: read back existing (subject_id → page_id). */
-    def existingRecords(): Map[Long, String]
+    /** S5: read back every page — key → page id, flag, stored properties. */
+    def storedPages(): Map[Long, StoredPage]
+    /** S5: the read-back's (subject_id → page_id). */
+    def existingRecords(): Map[Long, String] =
+      storedPages().map { case (k, p) => k -> p.pageId }
     /** K5: insert one row of typed properties. Throws on failure. */
     def insert(key: Long, properties: Map[String, String]): Unit
-    /** Upsert branch: replace properties of an existing page. */
-    def update(pageId: String, properties: Map[String, String]): Unit
+    /** Upsert branch: set `properties` on an existing page, empty the
+      * `cleared` ones, leave the rest as stored (Notion's PATCH merges
+      * property by property), and mark the page active — a returning key
+      * leaves its tombstone. */
+    def update(pageId: String, properties: Map[String, String],
+        cleared: Set[String]): Unit
     /** K6/I3: logical delete — `is_active=false`. */
     def softDelete(pageId: String): Unit
   }
@@ -62,7 +93,7 @@ object NotionSink {
 
   /** F11 int/float split (reference `notion_data_ingestion.py:273-278`):
     * an integral float renders as an integer (`5`, not `5.0`). */
-  private def numString(d: Double): String =
+  private[sinks] def numString(d: Double): String =
     if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
 
   /** F8/F11/F12: per-value property formatting — text truncated to 2000
@@ -86,60 +117,74 @@ object NotionSink {
       }
     }.toMap
 
+  /** The values of `names`, in order, as one string: each value
+    * length-prefixed, an absent one as `-`. Equal strings mean equal
+    * values. */
+  private def fingerprint(names: Array[String], value: String => Option[String]): String =
+    names.map(n => value(n).fold("-")(v => s"${v.length}:$v")).mkString
+
+  /** Per-row outcomes of one [[upsert]]: `updated` counts the PATCHes
+    * sent, `unchanged` the existing pages that needed none, `errors` the
+    * rows (and tombstones) whose write failed after its retries. */
   case class WriteReport(inserted: Long, updated: Long, softDeleted: Long,
-      errors: Long)
+      errors: Long, unchanged: Long = 0L)
 
   /** Merge-write `df` (keyed by `keyCol`) into the sink: new keys insert,
-    * existing keys update, keys present only in the sink soft-delete.
-    * `minIntervalMs` paces requests per partition (R2: the reference's
-    * API budget is ~3 req/s).
+    * changed pages update, unchanged pages are skipped, and active pages
+    * whose key left the frame soft-delete (see the object doc).
+    * `minIntervalMs` paces the requests actually sent, per partition (R2:
+    * the reference's API budget is ~3 req/s).
     */
   def upsert(
       df: DataFrame,
       keyCol: String,
       api: NotionApi,
       minIntervalMs: Long = 0L): WriteReport = {
-    val spark = df.sparkSession
+    val sc = df.sparkSession.sparkContext
     val schema = df.schema
     val keyIdx = schema.fieldIndex(keyCol)
-    // the join below appends __key/__page_id; an input column with either
-    // name would make the join ambiguous and the insert/update split wrong
-    require(!schema.fieldNames.exists(Set("__key", "__page_id")),
-      "input frame must not contain reserved columns __key/__page_id")
 
-    // S5/J4: sink snapshot is small relative to the frame — broadcast it.
-    val existing = api.existingRecords()
-    val existingDf = spark.createDataFrame(
-      existing.toSeq.map { case (k, p) => Row(k, p) }.asJava,
-      StructType(Seq(StructField("__key", LongType),
-        StructField("__page_id", StringType))))
+    // S5/J4: the sink snapshot is small relative to the frame — broadcast
+    // it, each page condensed to its id, flag and fingerprint (a handful of
+    // objects per page, where the property maps would cost dozens to
+    // serialize).
+    val names = schema.fieldNames
+    val stored = api.storedPages()
+    val storedBc = sc.broadcast(stored.map { case (k, p) =>
+      val unknown = names.exists(n => p.properties.get(n).contains(None))
+      k -> ((p.pageId, p.active,
+        if (unknown) None else Some(fingerprint(names, n => p.properties.get(n).flatten))))
+    })
 
-    val okAcc = spark.sparkContext.longAccumulator("notion.ok")
-    val updAcc = spark.sparkContext.longAccumulator("notion.updated")
-    val errAcc = spark.sparkContext.longAccumulator("notion.errors")
+    val okAcc = sc.longAccumulator("notion.ok")
+    val updAcc = sc.longAccumulator("notion.updated")
+    val sameAcc = sc.longAccumulator("notion.unchanged")
+    val keptAcc = sc.collectionAccumulator[Long]("notion.kept")
+    val errAcc = sc.longAccumulator("notion.errors")
+    val delAcc = sc.longAccumulator("notion.deleted")
+    val delErrAcc = sc.longAccumulator("notion.deleteErrors")
 
-    val joined =
-      df.join(broadcast(existingDf), col(keyCol) === col("__key"), "left_outer")
-    val joinedKeyIdx = joined.schema.fieldIndex("__key")
-    val pageIdIdx = joined.schema.fieldIndex("__page_id")
-    joined
-      .foreachPartition { rows: Iterator[Row] =>
+    try {
+      df.foreachPartition { rows: Iterator[Row] =>
         val limiter = new RateLimiter(minIntervalMs)
-        rows.foreach { row =>
+        def send(done: LongAccumulator)(write: => Unit): Unit = {
           limiter.acquire()
+          Retry.withBackoff(3, 100L)(write)
+          done.add(1)
+        }
+        rows.foreach { row =>
           try {
-            if (row.isNullAt(joinedKeyIdx)) { // no __key → insert
-              Retry.withBackoff(3, 100L) {
-                api.insert(row.getLong(keyIdx),
-                  formatProperties(row, schema))
-              }
-              okAcc.add(1)
-            } else {
-              Retry.withBackoff(3, 100L) {
-                api.update(row.getString(pageIdIdx),
-                  formatProperties(row, schema))
-              }
-              updAcc.add(1)
+            val key = row.getLong(keyIdx)
+            val page = storedBc.value.get(key)
+            if (page.isDefined) keptAcc.add(key) // before anything can fail
+            val props = formatProperties(row, schema)
+            page match {
+              case None => send(okAcc)(api.insert(key, props))
+              case Some((pageId, active, fp)) =>
+                if (active && fp.contains(fingerprint(names, props.get)))
+                  sameAcc.add(1)
+                else send(updAcc)(api.update(pageId, props,
+                  names.filterNot(props.contains).toSet))
             }
           } catch {
             case _: Exception => errAcc.add(1) // R4: log-and-continue
@@ -147,27 +192,29 @@ object NotionSink {
         }
       }
 
-    // I3: soft-delete sink keys absent from the frame — J2 anti join, with
-    // the PATCH loop run in foreachPartition like the insert/update lanes
-    // (nothing materializes on the driver: a mass-deletion sync stays
-    // distributed). Same R4 envelope: retry, then count-and-continue.
-    val delAcc = spark.sparkContext.longAccumulator("notion.deleted")
-    val delErrAcc = spark.sparkContext.longAccumulator("notion.deleteErrors")
-    existingDf
-      .join(df.select(col(keyCol).as("__k2")), col("__key") === col("__k2"),
-        "left_anti")
-      .foreachPartition { rows: Iterator[Row] =>
+      // I3: soft-delete the active pages whose key left the frame. The
+      // delete set comes from the read-back the driver already holds, minus
+      // the keys the pass above found; the PATCH loop runs in
+      // foreachPartition like the insert/update lane, so a mass-deletion
+      // sync stays distributed. Pages already inactive are not re-sent.
+      // Same R4 envelope: retry, then count-and-continue.
+      val kept = keptAcc.value.asScala.toSet
+      val gone = stored.collect {
+        case (k, p) if p.active && !kept(k) => p.pageId
+      }.toSeq
+      sc.parallelize(gone).foreachPartition { pageIds: Iterator[String] =>
         val limiter = new RateLimiter(minIntervalMs)
-        rows.foreach { r =>
+        pageIds.foreach { id =>
           limiter.acquire()
           try {
-            Retry.withBackoff(3, 100L)(api.softDelete(r.getString(1)))
+            Retry.withBackoff(3, 100L)(api.softDelete(id))
             delAcc.add(1)
           } catch { case _: Exception => delErrAcc.add(1) }
         }
       }
+    } finally storedBc.destroy()
     WriteReport(okAcc.value, updAcc.value, delAcc.value,
-      errAcc.value + delErrAcc.value)
+      errAcc.value + delErrAcc.value, sameAcc.value)
   }
 
   object InMemoryNotionApi {
@@ -208,19 +255,22 @@ object NotionSink {
       existing.getOrElse(s"parent-page-$nextId")
     override def createDatabase(name: String, properties: Map[String, String]): String =
       s"db-$name"
-    override def existingRecords(): Map[Long, String] =
-      pages.asScala.collect { case (pid, (k, _, _)) => k -> pid }.toMap
+    override def storedPages(): Map[Long, StoredPage] =
+      pages.asScala.map { case (pid, (k, props, active)) =>
+        k -> StoredPage(pid, active, props.map { case (n, v) => n -> Some(v) })
+      }.toMap
     override def insert(key: Long, properties: Map[String, String]): Unit = {
       if (failKeys(key))
         throw new RuntimeException(s"injected permanent failure for $key")
       maybeFail()
       pages.put(s"page-$nextId", (key, properties, true))
     }
-    override def update(pageId: String, properties: Map[String, String]): Unit = {
+    override def update(pageId: String, properties: Map[String, String],
+        cleared: Set[String]): Unit = {
       maybeFail()
       val cur = pages.get(pageId)
       require(cur != null, s"unknown page $pageId")
-      pages.put(pageId, (cur._1, properties, cur._3))
+      pages.put(pageId, (cur._1, cur._2 -- cleared ++ properties, true))
     }
     override def softDelete(pageId: String): Unit = {
       val cur = pages.get(pageId)

@@ -160,13 +160,14 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
   // ----------------------------------------------------------------- notion
 
   /** Minimal Notion API stub: databases, cursor-paginated query, page
-    * insert/patch — state lives in insertion order so pagination is
-    * deterministic. `failFirstInserts` answers 429 to the first N
-    * `POST /v1/pages`. */
+    * insert/patch (property-wise merge, as Notion does) — state lives in
+    * insertion order so pagination is deterministic. `failFirstInserts`
+    * answers 429 to the first N `POST /v1/pages`. */
   private class NotionStub(failFirstInserts: Int = 0) {
     val pages = new java.util.LinkedHashMap[String, ObjectNodeBox]()
     val nextId = new AtomicLong()
     val insertAttempts = new AtomicInteger()
+    val patches = new AtomicInteger()
     val queryRequests = new AtomicInteger()
     val databaseSchemas = new ConcurrentHashMap[String, JsonNode]()
     val parentPagesCreated = new AtomicInteger()
@@ -222,6 +223,7 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
             respond(x, 200, s"""{"id":"$id"}""")
           }
         } else if (x.getRequestMethod == "PATCH") {
+          patches.incrementAndGet()
           val id = path.stripPrefix("/v1/pages/")
           val box = syncPages(pages.get(id))
           if (box == null) respond(x, 404, "{}")
@@ -274,7 +276,8 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
 
       val r2 = NotionSink.upsert(frame((1L, "a2", 1.5), (2L, "b", 9.0)),
         "subject_id", a)
-      assert(r2.updated === 2 && r2.softDeleted === 1 && r2.errors === 0)
+      assert(r2.updated === 1 && r2.softDeleted === 1 && r2.errors === 0)
+      assert(r2.unchanged === 1) // key 2 already holds (b, 9)
 
       val byKey = stub.pages.asScala.values
         .map(b => stub.titleKey(b.props) -> b.props).toMap
@@ -330,6 +333,119 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
       assert(r === NotionSink.WriteReport(2, 0, 0, 0))
       assert(stub.insertAttempts.get() === 4) // 2 rejected + 2 retried
       assert(stub.pages.asScala.size === 2)
+    }
+  }
+
+  /** Runs `body` against the in-memory fake and against [[HttpNotionApi]]
+    * over the stub, so one spec pins both transports to the same
+    * semantics. */
+  private def onBothTransports(body: NotionSink.NotionApi => Unit): Unit = {
+    body(new NotionSink.InMemoryNotionApi())
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val a = api(base)
+      a.createDatabase("db", Map("subject_id" -> "title"))
+      body(a)
+    }
+  }
+
+  test("both transports: PATCH merges, a null clears, a returning key is active again") {
+    def rows(rs: (Long, Option[String], Option[Double])*) =
+      rs.toDF("subject_id", "name_cn", "score")
+    onBothTransports { a =>
+      NotionSink.upsert(
+        rows((1L, Some("a"), Some(8.5)), (2L, Some("b"), Some(2.0))), "subject_id", a)
+      // key 1 loses its name and score; key 2 leaves the frame
+      val r2 = NotionSink.upsert(rows((1L, None, None)), "subject_id", a)
+      assert(r2 === NotionSink.WriteReport(0, 1, 1, 0))
+      val s2 = a.storedPages()
+      assert(s2(1L).properties === Map("subject_id" -> Some("1")))
+      assert(s2(1L).active && !s2(2L).active)
+      // key 2 comes back with the values its tombstone still holds
+      val r3 = NotionSink.upsert(
+        rows((1L, None, None), (2L, Some("b"), Some(2.0))), "subject_id", a)
+      assert(r3 === NotionSink.WriteReport(0, 1, 0, 0, 1))
+      val s3 = a.storedPages()
+      assert(s3(2L).active)
+      assert(s3(2L).properties === Map("subject_id" -> Some("2"),
+        "name_cn" -> Some("b"), "score" -> Some("2")))
+    }
+  }
+
+  test("a repeated sync after a deletion sends no request") {
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val a = api(base)
+      a.createDatabase("db", Map("subject_id" -> "title"))
+      val all = (1 to 5).map(i => (i.toLong, s"n$i", i.toDouble))
+      NotionSink.upsert(frame(all: _*), "subject_id", a)
+      val r2 = NotionSink.upsert(frame(all.take(4): _*), "subject_id", a)
+      assert(r2 === NotionSink.WriteReport(0, 0, 1, 0, 4))
+      def writes = stub.insertAttempts.get() + stub.patches.get()
+      val before = writes
+      val r3 = NotionSink.upsert(frame(all.take(4): _*), "subject_id", a)
+      assert(r3 === NotionSink.WriteReport(0, 0, 0, 0, 4))
+      assert(writes === before) // the tombstone is not re-sent
+    }
+  }
+
+  test("decode inverts propertyJson for every property type; the rest is re-sent") {
+    import java.sql.{Date, Timestamp}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("subject_id", LongType), StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("text", StringType),
+      StructField("ts", TimestampType), StructField("day", DateType),
+      StructField("b", BooleanType)))
+    val a = new HttpNotionApi("http://127.0.0.1:1", "t", "p",
+      NotionSink.propertySchema(schema, "subject_id"))
+    def wire(n: String, v: String): JsonNode = // through JSON text, as sent
+      mapper.readTree(mapper.writeValueAsString(a.propertyJson(n, v)))
+    val rows = Seq(
+      Row(1L, 9.0, 8.1f, 0, 42L, "x" * 2500,
+        Timestamp.valueOf("2024-01-02 03:04:05"), Date.valueOf("2024-01-02"), true),
+      Row(2L, 8.1, -0.5f, -7, 999999999999999L, "孤独摇滚！",
+        Timestamp.valueOf("2024-01-02 03:04:05.123"), Date.valueOf("1999-12-31"), false),
+      Row(3L, 1e-5, 3.0f, Int.MaxValue, Long.MinValue / 10000, "🎸 ぼっち 😀",
+        Timestamp.valueOf("2024-06-30 00:00:00"), Date.valueOf("2024-02-29"), true),
+      Row(4L, -3.25, 1e-3f, 1, -5L, "", null, null, null),
+      Row(5L, 1e20, 1e10f, 2, 0L, "a\nb\t\"c\"", null, null, false))
+    for (r <- rows; (n, v) <- NotionSink.formatProperties(r, schema))
+      assert(a.decode(n, wire(n, v)) === Some(v), s"$n = $v")
+
+    // a decimal with a trailing zero, a long of 1e15 or more and a foreign
+    // property type do not read back exactly: they must count as changed
+    val oddSchema = StructType(Seq(StructField("subject_id", LongType),
+      StructField("price", DecimalType(4, 2)), StructField("big", LongType),
+      StructField("name_cn", StringType)))
+    val odd = new HttpNotionApi("http://127.0.0.1:1", "t", "p",
+      NotionSink.propertySchema(oddSchema, "subject_id"))
+    assert(odd.decode("price", odd.propertyJson("price", "8.10")) !== Some("8.10"))
+    assert(odd.decode("big", odd.propertyJson("big", "1234567890123456")) !==
+      Some("1234567890123456"))
+    assert(odd.decode("name_cn", mapper.readTree("""{"select":{"name":"x"}}""")) === None)
+
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val w = new HttpNotionApi(base, "t", "p",
+        NotionSink.propertySchema(oddSchema, "subject_id"))
+      w.createDatabase("db", Map("subject_id" -> "title"))
+      val df = spark.createDataFrame(Seq(
+        Row(1L, new java.math.BigDecimal("8.10"), 5L, "a"),
+        Row(2L, new java.math.BigDecimal("8.25"), 1234567890123456L, "b"),
+        Row(3L, new java.math.BigDecimal("8.25"), 5L, "c")).asJava, oddSchema)
+      assert(NotionSink.upsert(df, "subject_id", w) ===
+        NotionSink.WriteReport(3, 0, 0, 0))
+      assert(NotionSink.upsert(df, "subject_id", w) ===
+        NotionSink.WriteReport(0, 2, 0, 0, 1))
+      // key 3's name stored as another property type: re-sent too
+      val page3 = stub.pages.asScala.values.find(b => stub.titleKey(b.props) == "3").get
+      page3.props.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .set[JsonNode]("name_cn", mapper.readTree("""{"select":{"name":"c"}}"""))
+      assert(NotionSink.upsert(df, "subject_id", w) ===
+        NotionSink.WriteReport(0, 3, 0, 0, 0))
     }
   }
 }

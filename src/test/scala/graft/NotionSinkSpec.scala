@@ -36,7 +36,7 @@ class NotionSinkSpec extends AnyFunSuite with SparkSpec {
       "subject_id", api)
     val report = NotionSink.upsert(frame((1L, "a", 1.0), (2L, "b2", 5.0)),
       "subject_id", api)
-    assert(report.updated === 2)
+    assert(report.updated === 1 && report.unchanged === 1)
     assert(report.softDeleted === 1)
     val byKey = api.pages.asScala.values.map(p => p._1 -> p).toMap
     assert(byKey(2L)._2("name_cn") === "b2")
@@ -62,19 +62,19 @@ class NotionSinkSpec extends AnyFunSuite with SparkSpec {
     val r1 = NotionSink.upsert(df, "subject_id", run1Api)
     assert(r1.inserted === 8 && r1.errors === 2)
     // replay the SAME batch on a healthy transport against the same store:
-    // the upsert keys must dedupe — previously-written rows route to
-    // UPDATE via the fresh read-back snapshot, only the missing two insert
+    // the upsert keys must dedupe — previously-written rows match the
+    // fresh read-back snapshot and are skipped, only the missing two insert
     val run2Api = new InMemoryNotionApi("t-replay")
     val r2 = NotionSink.upsert(df, "subject_id", run2Api)
-    assert(r2 === NotionSink.WriteReport(2, 8, 0, 0))
+    assert(r2 === NotionSink.WriteReport(2, 0, 0, 0, 8))
     // exactly one active page per key — the replay created no duplicates
     val byKey = run2Api.pages.asScala.values.groupBy(_._1)
     assert(byKey.keySet === (1L to 10L).toSet)
     assert(byKey.values.forall(ps => ps.size === 1 && ps.head._3))
-    // and a THIRD replay is a pure no-op shape: all updates, no inserts
+    // and a THIRD replay is a pure no-op: every page already matches
     val r3 = NotionSink.upsert(df, "subject_id",
       new InMemoryNotionApi("t-replay"))
-    assert(r3 === NotionSink.WriteReport(0, 10, 0, 0))
+    assert(r3 === NotionSink.WriteReport(0, 0, 0, 0, 10))
   }
 
   test("mass-deletion sync stays distributed and counts every tombstone") {
@@ -87,9 +87,46 @@ class NotionSinkSpec extends AnyFunSuite with SparkSpec {
     val report = NotionSink.upsert(
       frame((1L to 10L).map(i => (i, s"r$i", i.toDouble)): _*),
       "subject_id", api)
-    assert(report === NotionSink.WriteReport(0, 10, 4990, 0))
+    assert(report === NotionSink.WriteReport(0, 0, 4990, 0, 10))
     val active = api.pages.asScala.values.count(_._3)
     assert(active === 10)
+  }
+
+  test("a delta sync leaves the same pages as PATCHing every existing key") {
+    // the always-PATCH path: a read-back whose stored properties are all
+    // unreadable, so every existing key compares changed and is updated
+    class AlwaysPatch(storeId: String) extends InMemoryNotionApi(storeId) {
+      override def storedPages(): Map[Long, NotionSink.StoredPage] =
+        super.storedPages().map { case (k, p) =>
+          k -> p.copy(properties = p.properties.map { case (n, _) => n -> None })
+        }
+    }
+    def rows(ks: Seq[Long], score: Long => Option[Double],
+        named: Long => Boolean = _ => true) =
+      ks.map(k => (k, Option(s"n$k").filter(_ => named(k)), score(k)))
+        .toDF("subject_id", "name_cn", "score")
+    val base = rows(1L to 60L, k => Some(k.toDouble))
+    // edited scores, scores and names that become null, removals (46–50)
+    val delta1 = rows((1L to 45L) ++ (51L to 60L),
+      k => if (k % 10 == 3) None else Some(if (k % 5 == 0) k + 0.5 else k.toDouble),
+      k => k % 7 != 0)
+    // the nulls filled again, removed keys back (46–50), more removals
+    // (41–45) and additions (61–65)
+    val delta2 = rows((1L to 40L) ++ (46L to 65L), k => Some(k.toDouble))
+    def state(api: InMemoryNotionApi) =
+      api.pages.asScala.values.map(p => p._1 -> (p._2, p._3)).toMap
+    val aware = new InMemoryNotionApi("t-equiv-aware")
+    val always = new AlwaysPatch("t-equiv-always")
+    for (df <- Seq(base, delta1, delta2)) {
+      val a = NotionSink.upsert(df, "subject_id", aware)
+      val b = NotionSink.upsert(df, "subject_id", always)
+      assert(a.errors === 0 && b.errors === 0)
+      assert(a.inserted === b.inserted && a.softDeleted === b.softDeleted)
+      assert(a.updated + a.unchanged === b.updated && b.unchanged === 0)
+      assert(state(aware) === state(always))
+    }
+    val last = NotionSink.upsert(delta2, "subject_id", aware)
+    assert(last === NotionSink.WriteReport(0, 0, 0, 0, 60))
   }
 
   test("property schema declaration maps Spark types to Notion types") {
